@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.etl.{Frozen, Tables}
+import graft.ops.{Dedup, Similarity, Temporal, TextOps}
+import graft.streaming.Streams
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line per
@@ -136,6 +139,36 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Run one action under a watchdog: elapsed seconds on success, -1 on
+    * throw or on exceeding `capSec` (the action's job group is
+    * cancelled so a hung query can't also poison the next one). Job
+    * groups are thread-local, so the group is set inside the worker
+    * thread. */
+  private[graft] def capped(spark: SparkSession, capSec: Double,
+                            name: String)(action: => Unit): Double = {
+    val t0 = System.nanoTime()
+    @volatile var failed: Option[String] = None
+    val worker = new Thread(() => {
+      try {
+        spark.sparkContext
+          .setJobGroup(s"bench-$name", name, interruptOnCancel = true)
+        action
+      } catch { case e: Throwable => failed = Some(String.valueOf(e)) }
+    }, s"bench-$name")
+    worker.setDaemon(true)
+    worker.start()
+    worker.join((capSec * 1000).toLong)
+    if (worker.isAlive) {
+      spark.sparkContext.cancelJobGroup(s"bench-$name")
+      worker.join(15000)
+      System.err.println(s"[bench] $name exceeded ${capSec}s cap, cancelled")
+      -1.0
+    } else if (failed.isDefined) {
+      System.err.println(s"[bench] $name failed: ${failed.get}")
+      -1.0
+    } else (System.nanoTime() - t0) / 1e9
+  }
+
   /** Extra CLI args are a dev-only name filter (same convention as
     * Verify): run only the named main/scale/streaming entries. Empty =
     * everything. The official driver run passes no args. */
@@ -144,7 +177,6 @@ object Bench {
     def keep(name: String): Boolean =
       nameFilter.isEmpty || nameFilter.contains(name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val capSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP", "120").toDouble
     val budgetSec =
@@ -171,78 +203,40 @@ object Bench {
     try java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get("target/bench_last_line.json"))
     catch { case _: Throwable => () }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv("32")
     // Untimed warm-up: JIT/codegen round trip, then the three export-backed
     // queries so the one-time CSV/JSON/partitioned fixture materialization
     // happens outside every timed region (the export memo persists across
     // passes; only the staging memos are cleared per pass).
     try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .groupBy("l_returnflag").count().count()
+      Session.warm(spark, sfDir)
       SparkEntry.queries.view
         .filterKeys(k => k.startsWith("q48") || k.startsWith("q49") ||
           k.startsWith("q50"))
         .foreach { case (_, fn) => fn(spark, sfDir).count() }
-      // s03's / s04's multi-file exports are one-time materialization
-      // I/O too
-      graft.etl.Tables.exportedEventsParts(spark, sfDir)
-      graft.etl.Tables.exportedDocsParts(spark, sfDir)
-      // the split PQ scale benches' frozen corpus/centroids/codebooks:
-      // trained once here so x40/x45 search entries time pure search
-      DataQueries.warmPqStatics(spark, sfDir)
-      // x78i's frozen BM25 postings index: built once here so the
-      // entry times pure retrieval (the x40/x45 train/search split
-      // applied to lexical retrieval)
-      DataQueries.warmBm25Static(spark, sfDir)
-      // x08r/x08z's frozen real-media asset table: synthesized once
-      // here so the codec entries time decode-side work only
-      DataQueries.warmMediaStatic(spark, sfDir)
+      // the paced streams' multi-file exports are one-time
+      // materialization I/O too
+      Tables.exportedEventsParts(spark, sfDir)
+      Tables.exportedDocsParts(spark, sfDir)
+      Tables.exportedEmbsParts(spark, sfDir)
       // x34's 10x month-partitioned fact is one-time materialization
       // I/O too (a deployment's fact table already lives in this layout)
-      graft.etl.Tables.exportedSegFactByMonth(spark, sfDir)
+      Tables.exportedSegFactByMonth(spark, sfDir)
       hostKernelSec(spark) // JIT the calibration kernel itself
       ()
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
+    // the scale benches' frozen statics (PQ corpus/centroids/codebooks,
+    // the x78i BM25 index, the x08r/x08z asset table): built once here
+    // so those entries time pure search/retrieval/decode; a static that
+    // fails to build fails its entries (-1) instead of building inside
+    // the timed region
+    Frozen.warm(spark, sfDir, DataQueries.frozenStatics)
 
-    /** Run one action under a watchdog: elapsed seconds on success, -1 on
-      * throw or on exceeding the cap (the query's job group is cancelled
-      * so a hung query can't also poison the next one). Job groups are
-      * thread-local, so the group is set inside the worker thread. */
-    def timed(name: String)(action: => Unit): Double = {
-      val t0 = System.nanoTime()
-      @volatile var failed: Option[String] = None
-      val worker = new Thread(() => {
-        try {
-          spark.sparkContext
-            .setJobGroup(s"bench-$name", name, interruptOnCancel = true)
-          action
-        } catch { case e: Throwable => failed = Some(String.valueOf(e)) }
-      }, s"bench-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join((capSec * 1000).toLong)
-      if (worker.isAlive) {
-        spark.sparkContext.cancelJobGroup(s"bench-$name")
-        worker.join(15000)
-        System.err.println(s"[bench] $name exceeded ${capSec}s cap, cancelled")
-        -1.0
-      } else if (failed.isDefined) {
-        System.err.println(s"[bench] $name failed: ${failed.get}")
-        -1.0
-      } else (System.nanoTime() - t0) / 1e9
-    }
+    def timed(name: String)(action: => Unit): Double =
+      capped(spark, capSec, name)(action)
 
     def timePass(qs: Seq[(String, (SparkSession, String) => DataFrame)])
         : Seq[(String, Double)] =
@@ -296,166 +290,93 @@ object Bench {
     // operator spins up (and commits) one state store per shuffle
     // partition per microbatch, so at this input scale the session-wide
     // 32 is pure overhead — the s02 interval join carries 4 stores per
-    // partition. The knob is the deployment-level setting a cluster
-    // would tune per stream; streams run on their OWN SparkSession
+    // partition — and 8 is the deployment-level setting a cluster would
+    // tune per stream. Streams run on their OWN SparkSession
     // (spark.newSession(): shared SparkContext, isolated SQLConf), so
-    // the main session's shuffle setting is never mutated — previously a
-    // watchdog-abandoned stream thread could leak the 8-partition value
+    // the main session's shuffle setting is never mutated — a
+    // watchdog-abandoned stream thread cannot leak the 8-partition value
     // into subsequent timed batch queries.
-    val streamShuffle =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
     val streamSpark = spark.newSession()
     // conf inheritance across newSession() is not guaranteed for
     // builder-time options; set what the streams need explicitly
-    streamSpark.conf.set("spark.sql.shuffle.partitions", streamShuffle)
+    streamSpark.conf.set("spark.sql.shuffle.partitions", "8")
     streamSpark.conf.set("spark.sql.session.timeZone", "UTC")
     streamSpark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // state-store provider A/B knob (PLANS.md "s03 state-store provider"
-    // records the controlled HDFS-default vs RocksDB measurement); the
-    // default stays Spark's default provider
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER").foreach(p =>
-      streamSpark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", p))
-    // s05's static corpus band index: built ONCE, untimed (a deployment
-    // prebuilds it — the gate's steady-state cost is the per-batch
-    // band + semi-join, not the index build), shared across passes via
-    // the localCheckpoint
-    val gateIndexMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def gateIndex(s: SparkSession, d: String): DataFrame = synchronized {
-      gateIndexMemo.getOrElseUpdate(d, graft.ops.Dedup.nearDupIndex(
-        graft.etl.Tables.documents(s, d)).localCheckpoint())
+    // The streams' frozen statics: built ONCE, untimed, by the warm
+    // call below (a deployment prebuilds them long before the stream
+    // runs — a gate's steady-state cost is the per-batch probe, not the
+    // build), shared across passes via localCheckpoint. A static whose
+    // build fails fails its entries (-1) instead of building in-pass.
+    // s05/s10: the corpus band index
+    val gateIndex = Frozen("s05_band_index") { (s, d) =>
+      Dedup.nearDupIndex(Tables.documents(s, d)).localCheckpoint()
     }
-    // s06's frozen reference profile: same discipline — a deployment
-    // freezes it long before the stream runs
-    val refProfileMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def refProfile(s: SparkSession, d: String): DataFrame = synchronized {
-      refProfileMemo.getOrElseUpdate(d,
-        graft.streaming.Streams.referenceProfile(
-          graft.etl.Tables.documents(s, d)).localCheckpoint())
+    // s06: the reference quality profile
+    val refProfile = Frozen("s06_reference_profile") { (s, d) =>
+      Streams.referenceProfile(Tables.documents(s, d)).localCheckpoint()
     }
-    // s07's frozen coarse-quantizer statics (centroids + assigned corpus
-    // index): same discipline as the s05 band index — a deployment
-    // trains and materializes both long before the stream runs, so the
-    // benched cost is the per-batch assign + within-list screen only
-    val semGateMemo =
-      scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)]
-    def semGateStatics(s: SparkSession, d: String): (DataFrame, DataFrame) =
-      synchronized {
-        semGateMemo.getOrElseUpdate(d, {
-          val emb = graft.etl.Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding"))
-          val cents = emb.filter(col("vec_id") % 50 === 0)
-            .select(col("vec_id").as("centroid_id"),
-              col("embedding").as("cvec"))
-            .localCheckpoint()
-          (cents,
-            graft.ops.Dedup.semanticIndex(emb, cents).localCheckpoint())
-        })
-      }
-    // s08's frozen per-list embedding profile: the s06 discipline on
-    // the embedding modality
-    val embProfileMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def embProfile(s: SparkSession, d: String): DataFrame = synchronized {
-      embProfileMemo.getOrElseUpdate(d, {
-        val (cents, _) = semGateStatics(s, d)
-        graft.ops.Similarity.embeddingProfile(
-          graft.etl.Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding")), cents)
-          .localCheckpoint()
-      })
+    // s07/s08: the coarse quantizer (centroids, assigned corpus index)
+    val semGate = Frozen("s07_quantizer") { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+      val cents = emb.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("centroid_id"),
+          col("embedding").as("cvec"))
+        .localCheckpoint()
+      (cents, Dedup.semanticIndex(emb, cents).localCheckpoint())
     }
-    // s09's frozen DSIR profile (raw model = the corpus, target model =
-    // its English slice): built and materialized untimed, the same
-    // discipline as the band/quantizer indexes
-    val dsirProfileMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def dsirProf(s: SparkSession, d: String): DataFrame = synchronized {
-      dsirProfileMemo.getOrElseUpdate(d, {
-        val docs = graft.etl.Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("text"))
-        graft.ops.TextOps.dsirProfile(docs,
-          docs.filter(col("lang") === "en"), n = 2, buckets = 4096)
-          .localCheckpoint()
-      })
+    // s08: the per-list embedding profile
+    val embProfile = Frozen("s08_embedding_profile") { (s, d) =>
+      Similarity.embeddingProfile(
+        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+        semGate(s, d)._1).localCheckpoint()
     }
-    // s11's frozen static right side: the view-event history snapshot
-    // each purchase microbatch as-of joins against — materialized
-    // untimed, the same discipline as the other stream statics
-    val viewsStaticMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def viewsStatic(s: SparkSession, d: String): DataFrame = synchronized {
-      viewsStaticMemo.getOrElseUpdate(d,
-        graft.etl.Tables.events(s, d)
-          .filter(col("event_type") === "view")
-          .select(col("event_id").as("view_id"), col("user_id"),
-            col("ts").as("view_ts"), col("value").as("view_value"))
-          .localCheckpoint())
+    // s09/s10: the DSIR profile (raw model = the corpus, target model =
+    // its English slice)
+    val dsirProf = Frozen("s09_dsir_profile") { (s, d) =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("text"))
+      TextOps.dsirProfile(docs, docs.filter(col("lang") === "en"), n = 2,
+        buckets = 4096).localCheckpoint()
     }
-    // s21's frozen incident windows: every error event opens a
-    // 30-minute window — materialized untimed like the other statics
-    val incidentsStaticMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def incidentsStatic(s: SparkSession, d: String): DataFrame =
-      synchronized {
-        incidentsStaticMemo.getOrElseUpdate(d,
-          graft.etl.Tables.events(s, d)
-            .filter(col("event_type") === "error")
-            .select(col("event_id").as("error_id"),
-              col("ts").as("inc_start"),
-              (col("ts") + expr("INTERVAL 30 minutes")).as("inc_end"))
-            .localCheckpoint())
-      }
-    // s12's frozen benchmark BM25 index: every 50th doc as the
-    // held-out "benchmark" corpus (fan-out per incoming doc = sum of
-    // matched bench dfs — the benchmark size IS the cost knob),
-    // built and materialized untimed like the other stream statics
-    val bm25IndexMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def bm25Idx(s: SparkSession, d: String): DataFrame = synchronized {
-      bm25IndexMemo.getOrElseUpdate(d, graft.ops.TextOps.bm25Index(
-        graft.etl.Tables.documents(s, d)
-          .filter(col("doc_id") % 50 === 0)).localCheckpoint())
+    // s11: the view-event history each purchase batch as-of joins
+    val viewsStatic = Frozen("s11_view_history") { (s, d) =>
+      Tables.events(s, d)
+        .filter(col("event_type") === "view")
+        .select(col("event_id").as("view_id"), col("user_id"),
+          col("ts").as("view_ts"), col("value").as("view_value"))
+        .localCheckpoint()
     }
-    // s18's frozen transition-probability baseline: the reference-
-    // period matrix (even users — a deliberately different population
-    // than the full stream, so some drift flags genuinely fire), the
-    // s06 frozen-profile discipline on behavior statistics
-    val transBaseMemo =
-      scala.collection.mutable.Map.empty[String, DataFrame]
-    def transBase(s: SparkSession, d: String): DataFrame = synchronized {
-      transBaseMemo.getOrElseUpdate(d,
-        graft.ops.Temporal.transitionMatrix(
-            graft.etl.Tables.events(s, d)
-              .filter(col("user_id") % 2 === 0),
-            "user_id", "ts", "event_type", "event_id")
-          .localCheckpoint())
+    // s12: the benchmark BM25 index — every 50th doc as the held-out
+    // "benchmark" corpus (fan-out per incoming doc = sum of matched
+    // bench dfs — the benchmark size IS the cost knob)
+    val bm25Idx = Frozen("s12_benchmark_bm25_index") { (s, d) =>
+      TextOps.bm25Index(Tables.documents(s, d)
+        .filter(col("doc_id") % 50 === 0)).localCheckpoint()
     }
-    // warm-up failure must FAIL the dependent benches, not silently move
-    // the index/profile build inside the timed region (getOrElseUpdate
-    // would rebuild on first use): s05/s06/s07/s08 check the flag and
-    // record -1
-    var streamStaticWarm = false
-    try { gateIndex(streamSpark, sfDir); refProfile(streamSpark, sfDir)
-      semGateStatics(streamSpark, sfDir)
-      embProfile(streamSpark, sfDir)
-      dsirProf(streamSpark, sfDir)
-      viewsStatic(streamSpark, sfDir)
-      incidentsStatic(streamSpark, sfDir)
-      bm25Idx(streamSpark, sfDir)
-      transBase(streamSpark, sfDir)
-      graft.etl.Tables.exportedEmbsParts(streamSpark, sfDir)
-      streamStaticWarm = true
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] stream-static warm-up failed " +
-          s"(s05/s06/s07/s08/s09/s12/s18 will record -1): ${e.getMessage}")
+    // s18: the reference-period transition matrix (even users — a
+    // deliberately different population than the full stream, so some
+    // drift flags genuinely fire)
+    val transBase = Frozen("s18_transition_baseline") { (s, d) =>
+      Temporal.transitionMatrix(
+          Tables.events(s, d).filter(col("user_id") % 2 === 0),
+          "user_id", "ts", "event_type", "event_id")
+        .localCheckpoint()
     }
-    def requireStreamStaticWarm(): Unit =
-      if (!streamStaticWarm) throw new IllegalStateException(
-        "stream-static warm-up failed; refusing to time an in-pass build")
+    // s21: the incident windows — every error event opens a 30-minute
+    // window
+    val incidents = Frozen("s21_incident_windows") { (s, d) =>
+      Tables.events(s, d)
+        .filter(col("event_type") === "error")
+        .select(col("event_id").as("error_id"),
+          col("ts").as("inc_start"),
+          (col("ts") + expr("INTERVAL 30 minutes")).as("inc_end"))
+        .localCheckpoint()
+    }
+    Frozen.warm(streamSpark, sfDir, Seq(gateIndex, refProfile, semGate,
+      embProfile, dsirProf, viewsStatic, bm25Idx, transBase, incidents))
+    val noopSink: DataFrame => Unit =
+      _.write.format("noop").mode("overwrite").save()
     def runStream(name: String, df: DataFrame, mode: String): Unit =
       runStreamQuery(name, () =>
         df.writeStream.format("noop").outputMode(mode)
@@ -488,7 +409,6 @@ object Bench {
         streamDetail(name) = s"""{"batches":${durs.size},""" +
           s""""max_batch_ms":${durs.max},"sum_batch_ms":${durs.sum}}"""
     }
-    import graft.streaming.Streams
     val streaming: Seq[(String, (SparkSession, String) => Unit)] = Seq(
       "s01_hourly_rollup" -> ((s, d) =>
         runStream("s01_hourly_rollup",
@@ -506,166 +426,90 @@ object Bench {
       "s03_steady_rollup" -> ((s, d) =>
         runStream("s03_steady_rollup",
           Streams.hourlyRollup(Streams.eventsStreamPaced(s,
-            graft.etl.Tables.exportedEventsParts(s, d))), "append")),
+            Tables.exportedEventsParts(s, d))), "append")),
       // ingest quality gate: per-source quality/PII screen as a running
       // aggregate over the paced 8-part document export (complete mode,
       // one state row per source)
       "s04_quality_gate" -> ((s, d) =>
         runStream("s04_quality_gate",
           Streams.qualityScreen(Streams.docsStreamPaced(s,
-            graft.etl.Tables.exportedDocsParts(s, d))), "complete")),
+            Tables.exportedDocsParts(s, d))), "complete")),
       // near-dup ingest gate: paced documents banded per microbatch and
-      // screened against the static corpus band index (built once,
-      // untimed — a deployment prebuilds it) via foreachBatch — the
+      // screened against the frozen corpus band index — the
       // stream-static MinHash gate shape, stateless across batches
-      "s05_neardup_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val idx = gateIndex(s, d)
+      "s05_neardup_gate" -> ((s, d) =>
         runStreamQuery("s05_neardup_gate", () =>
-          Streams.docsStreamPaced(s, graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Dedup.nearDupFlag(b, idx)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
+          Streams.runNearDupGateOnce(s, Tables.exportedDocsParts(s, d),
+            gateIndex(s, d), noopSink))),
       // distribution-drift monitor: per-source running means vs the
-      // frozen (untimed) reference profile — complete mode, one state
-      // row per source, the s04 gate generalized to drift
-      "s06_drift_monitor" -> ((s, d) => {
-        requireStreamStaticWarm()
+      // frozen reference profile — complete mode, one state row per
+      // source, the s04 gate generalized to drift
+      "s06_drift_monitor" -> ((s, d) =>
         runStream("s06_drift_monitor",
           Streams.driftMonitor(Streams.docsStreamPaced(s,
-            graft.etl.Tables.exportedDocsParts(s, d)), refProfile(s, d)),
-          "complete")
-      }),
+            Tables.exportedDocsParts(s, d)), refProfile(s, d)),
+          "complete")),
       // semantic ingest gate: paced embeddings assigned to the frozen
       // coarse quantizer per microbatch and screened within-list against
-      // the static assigned-corpus index (both built once, untimed) via
-      // foreachBatch — the s05 discipline on the embedding modality,
-      // stateless across batches
+      // the frozen assigned-corpus index — the s05 discipline on the
+      // embedding modality, stateless across batches
       "s07_semantic_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val (cents, idx) = semGateStatics(s, d)
+        val (cents, idx) = semGate(s, d)
         runStreamQuery("s07_semantic_gate", () =>
-          Streams.embsStreamPaced(s, graft.etl.Tables.exportedEmbsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Dedup.semanticDupFlag(b, idx, cents, tau = 0.99)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
+          Streams.runSemanticGateOnce(s, Tables.exportedEmbsParts(s, d),
+            idx, cents, noopSink))
       }),
       // embedding-space drift monitor: paced embeddings quantized
       // against the frozen centroids per microbatch, per-list running
-      // count + mean cosine vs the frozen (untimed) profile — complete
-      // mode, one state row per list, the s06 gate on the embedding
-      // modality
-      "s08_embedding_drift" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val (cents, _) = semGateStatics(s, d)
+      // count + mean cosine vs the frozen profile — complete mode, one
+      // state row per list, the s06 gate on the embedding modality
+      "s08_embedding_drift" -> ((s, d) =>
         runStream("s08_embedding_drift",
-          graft.ops.Similarity.embeddingDriftMonitor(
-            Streams.embsStreamPaced(s,
-              graft.etl.Tables.exportedEmbsParts(s, d)),
-            cents, embProfile(s, d)),
-          "complete")
-      }),
+          Similarity.embeddingDriftMonitor(
+            Streams.embsStreamPaced(s, Tables.exportedEmbsParts(s, d)),
+            semGate(s, d)._1, embProfile(s, d)),
+          "complete")),
       // DSIR ingest gate: paced documents scored per microbatch against
-      // the frozen (untimed) bucket profile via foreachBatch — one
-      // broadcast join + one doc-keyed aggregate per batch, stateless
-      // across batches, the s05 discipline on the data-selection model
-      "s09_dsir_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val prof = dsirProf(s, d)
+      // the frozen bucket profile — one broadcast join + one doc-keyed
+      // aggregate per batch, stateless across batches, the s05
+      // discipline on the data-selection model
+      "s09_dsir_gate" -> ((s, d) =>
         runStreamQuery("s09_dsir_gate", () =>
-          Streams.docsStreamPaced(s,
-              graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.TextOps.dsirScore(b, prof)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
+          Streams.runDsirGateOnce(s, Tables.exportedDocsParts(s, d),
+            dsirProf(s, d), noopSink))),
       // composed ingest screen: quality + PII + near-dup flag + DSIR
-      // score in ONE foreachBatch pass against both frozen statics —
-      // the production shape (one stream instead of three); per batch
-      // the union of the component costs, stateless across batches
-      "s10_ingest_screen" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val idx = gateIndex(s, d)
-        val prof = dsirProf(s, d)
+      // score in ONE pass per batch against both frozen statics — the
+      // production shape (one stream instead of three); per batch the
+      // union of the component costs, stateless across batches
+      "s10_ingest_screen" -> ((s, d) =>
         runStreamQuery("s10_ingest_screen", () =>
-          Streams.docsStreamPaced(s,
-              graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              Streams.ingestScreen(b, idx, prof)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
+          Streams.runIngestScreenOnce(s, Tables.exportedDocsParts(s, d),
+            gateIndex(s, d), dsirProf(s, d), noopSink))),
       // stream-static as-of enrichment: each paced purchase microbatch
-      // picks the latest same-user view from the frozen (untimed)
-      // history snapshot — per batch the t70 join-free union+window
-      // shape, stateless across batches
-      "s11_asof_enrich" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val views = viewsStatic(s, d)
+      // picks the latest same-user view from the frozen history
+      // snapshot — per batch the t70 join-free union+window shape,
+      // stateless across batches
+      "s11_asof_enrich" -> ((s, d) =>
         runStreamQuery("s11_asof_enrich", () =>
-          Streams.eventsStreamPaced(s,
-              graft.etl.Tables.exportedEventsParts(s, d))
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"), col("user_id"),
-              col("ts"))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Temporal.asofJoin(b, views, Seq("user_id"),
-                  "ts", "view_ts", Seq("view_id", "view_value"),
-                  tie = "view_id")
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
+          Streams.runAsofEnrichOnce(s, Tables.exportedEventsParts(s, d),
+            viewsStatic(s, d), "view_ts", Seq("view_id", "view_value"),
+            tie = "view_id", sink = noopSink))),
       // lexical-decontamination gate: paced documents BM25-scored per
-      // microbatch against the frozen benchmark index (built once,
-      // untimed) via foreachBatch — stateless, the s05 discipline on
-      // scored retrieval; production double-sum accumulator (the
-      // bench measures the gate, the t84 oracle owns the arithmetic)
-      "s12_bm25_gate" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val idx = bm25Idx(s, d)
+      // microbatch against the frozen benchmark index — stateless, the
+      // s05 discipline on scored retrieval; production double-sum
+      // accumulator (the bench measures the gate, the t84 oracle owns
+      // the arithmetic)
+      "s12_bm25_gate" -> ((s, d) =>
         runStreamQuery("s12_bm25_gate", () =>
-          Streams.docsStreamPaced(s, graft.etl.Tables.exportedDocsParts(s, d))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.TextOps.bm25ScreenFlag(b, idx, tau = 9.0,
-                  exactSums = false)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
+          Streams.runBm25GateOnce(s, Tables.exportedDocsParts(s, d),
+            bm25Idx(s, d), noopSink, tau = 9.0, exactSums = false))),
       // streaming cardinality monitor: the HLL sketch as a complete-mode
       // running aggregate over the paced 8-part event export — bounded
       // state (512 ints per event type) however many users stream past
       "s13_cardinality_monitor" -> ((s, d) =>
         runStream("s13_cardinality_monitor",
           Streams.cardinalityMonitor(Streams.eventsStreamPaced(s,
-            graft.etl.Tables.exportedEventsParts(s, d))),
+            Tables.exportedEventsParts(s, d))),
           "complete")),
       // length-drift gate: sampled token-count quantiles per source as
       // ONE stateful aggregation (expression-interpolated — streaming
@@ -673,7 +517,7 @@ object Bench {
       "s14_length_gate" -> ((s, d) =>
         runStream("s14_length_gate",
           Streams.lengthDriftGate(Streams.docsStreamPaced(s,
-            graft.etl.Tables.exportedDocsParts(s, d))),
+            Tables.exportedDocsParts(s, d))),
           "complete")),
       // streaming funnel: out-of-order-tolerant custom state — events
       // buffer until the watermark passes them, then fold into the
@@ -681,27 +525,26 @@ object Bench {
       "s15_funnel" -> ((s, d) =>
         runStream("s15_funnel",
           Streams.funnelWithState(Streams.eventsStreamPaced(s,
-              graft.etl.Tables.exportedEventsPartsFlush(s, d)),
+              Tables.exportedEventsPartsFlush(s, d)),
             Seq("signup", "view", "purchase")).toDF(),
           "update")),
       // item-frequency monitor: the Count-Min grid as the one stateful
       // aggregate (<= 4x1024 cells per event type forever), each
-      // trigger's complete grid probed for a 4-item watch list in
-      // foreachBatch — the per-item replay-storm gate next to s13's
-      // per-type cardinality gate
+      // trigger's complete grid probed for a 4-item watch list — the
+      // per-item replay-storm gate next to s13's per-type cardinality
+      // gate
       "s16_frequency_monitor" -> ((s, d) => {
         import s.implicits._
         val watch = Seq(("click", "1"), ("click", "2"), ("view", "3"),
           ("purchase", "4")).toDF("event_type", "probe")
         runStreamQuery("s16_frequency_monitor", () =>
           Streams.startFrequencyMonitor(s,
-            graft.etl.Tables.exportedEventsParts(s, d), watch,
-            maxCount = 1000L,
-            sink = _.write.format("noop").mode("overwrite").save()))
+            Tables.exportedEventsParts(s, d), watch,
+            maxCount = 1000L, sink = noopSink))
       }),
       // s16's grid under a 1-day half-life: the long-running form —
       // forward-weighted 2^day decimal cells, same bounded state, the
-      // foreachBatch probe rescaled as of the fixture window's end so
+      // per-trigger probe rescaled as of the fixture window's end so
       // month-old floods stop alarming while fresh ones still do
       "s19_decayed_frequency" -> ((s, d) => {
         import s.implicits._
@@ -709,69 +552,50 @@ object Bench {
           ("purchase", "4")).toDF("event_type", "probe")
         runStreamQuery("s19_decayed_frequency", () =>
           Streams.startDecayedFrequencyMonitor(s,
-            graft.etl.Tables.exportedEventsParts(s, d), watch,
+            Tables.exportedEventsParts(s, d), watch,
             maxDecayed = 100.0,
             t0Micros = 1704067200000000L, halfLifeSeconds = 86400L,
-            asOfMicros = 1706659200000000L,
-            sink = _.write.format("noop").mode("overwrite").save()))
+            asOfMicros = 1706659200000000L, sink = noopSink))
       }),
       // s13's cardinality monitor under epoch slicing: one p=9 register
       // set per (type, day) as the one stateful aggregate (<= 88 x 512
       // ints per type forever), each trigger's grid recombined with
-      // recency weights in foreachBatch so month-old cardinality storms
-      // un-alarm while fresh ones fire — the s19 decay discipline
-      // applied to distinct counts
+      // recency weights so month-old cardinality storms un-alarm while
+      // fresh ones fire — the s19 decay discipline applied to distinct
+      // counts
       "s20_decayed_cardinality" -> ((s, d) =>
         runStreamQuery("s20_decayed_cardinality", () =>
           Streams.startDecayedCardinalityMonitor(s,
-            graft.etl.Tables.exportedEventsParts(s, d),
+            Tables.exportedEventsParts(s, d),
             minDistinct = 2.0, maxRepeatFactor = 500.0,
             activityFloor = 1.0,
             t0Micros = 1704067200000000L, halfLifeSeconds = 86400L,
-            asOfMicros = Some(1706659200000000L),
-            sink = _.write.format("noop").mode("overwrite").save()))),
+            asOfMicros = Some(1706659200000000L), sink = noopSink))),
       // stream-static range join: each paced purchase microbatch x the
       // frozen incident windows (every containing window, the
       // many-match contract) — the s11 discipline on t121's operator
-      "s21_range_join" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val incidents = incidentsStatic(s, d)
+      "s21_range_join" -> ((s, d) =>
         runStreamQuery("s21_range_join", () =>
-          Streams.eventsStreamPaced(s,
-              graft.etl.Tables.exportedEventsParts(s, d))
-            .filter(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"), col("ts"))
-            .writeStream
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              graft.ops.Temporal.rangeJoinBucketed(b, incidents,
-                  "ts", "inc_start", "inc_end", bucketSeconds = 1800L)
-                .write.format("noop").mode("overwrite").save()
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start())
-      }),
+          Streams.runRangeJoinOnce(s, Tables.exportedEventsParts(s, d),
+            incidents(s, d), "inc_start", "inc_end",
+            bucketSeconds = 1800L, sink = noopSink))),
       // streaming transition extraction: buffer-until-watermark pair
       // emission (the s15 discipline on consecutive-event pairs); the
       // flush sentinel part advances the watermark so the tails emit
       "s17_transitions" -> ((s, d) =>
         runStream("s17_transitions",
           Streams.transitionsWithState(Streams.eventsStreamPaced(s,
-            graft.etl.Tables.exportedEventsPartsFlush(s, d))).toDF(),
+            Tables.exportedEventsPartsFlush(s, d))).toDF(),
           "append")),
       // transition-probability drift gate: s17's pair extraction with
       // each microbatch folded into the running (prev, next) grid and
-      // alarmed against the frozen (untimed) reference-period matrix —
-      // the s06 drift discipline on t108's behavior statistics
-      "s18_transition_drift" -> ((s, d) => {
-        requireStreamStaticWarm()
-        val base = transBase(s, d)
+      // alarmed against the frozen reference-period matrix — the s06
+      // drift discipline on t108's behavior statistics
+      "s18_transition_drift" -> ((s, d) =>
         runStreamQuery("s18_transition_drift", () =>
           Streams.startTransitionDriftMonitor(s,
-            graft.etl.Tables.exportedEventsPartsFlush(s, d), base,
-            tol = 0.1,
-            sink = _.write.format("noop").mode("overwrite").save()))
-      }))
+            Tables.exportedEventsPartsFlush(s, d), transBase(s, d),
+            tol = 0.1, sink = noopSink))))
     // `only` is re-evaluated just before each stream runs (not once up
     // front) so a stateful predicate — the salvage wall-budget check —
     // can cut the pass short between streams

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.etl.{Tables => T}
+import graft.etl.{Frozen, Tables => T}
 import graft.ops.{Dedup, Multimodal, Similarity, Stats, Temporal, TextOps}
 
 /** Training-data pipeline operators over the `documents` / `embeddings` /
@@ -2795,67 +2795,54 @@ object DataQueries {
   /** Frozen statics for the split PQ train/search scale benches: the
     * shared 16k corpus, its 128-list coarse centroids, and the plain +
     * residual codebooks, all localCheckpointed. Built ONCE untimed
-    * (Bench warm-up calls [[warmPqStatics]]; a dev-filtered run builds
-    * lazily inside the first entry that needs them) so the search
-    * entries time pure search order-independently while the train
-    * entries time a fresh training run each pass. Deliberately NOT
-    * cleared by [[clearStagingCache]]: a deployment trains its index
-    * long before any search runs, so per-pass cold staging does not
-    * apply to the index side. */
+    * (Bench warms [[frozenStatics]]; a dev-filtered run builds lazily
+    * inside the first entry that needs them) so the search entries
+    * time pure search order-independently while the train entries
+    * time a fresh training run each pass. Deliberately NOT cleared by
+    * [[clearStagingCache]]: a deployment trains its index long before
+    * any search runs, so per-pass cold staging does not apply to the
+    * index side. */
   private case class PqStatics(big: DataFrame, cents: DataFrame,
                                cb: DataFrame, cbr: DataFrame,
                                graph: DataFrame)
-  private val pqStaticsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, PqStatics]
-  private def pqStatics(s: SparkSession, d: String): PqStatics =
-    pqStaticsMemo.getOrElseUpdate(d, {
-      val big = scaledEmbeddings(s, d, copies = 8)
-      val cents = big.filter(col("vec_id") % 125 === 0)
-        .select(col("vec_id").as("centroid_id"),
-          col("embedding").as("cvec"))
-        .localCheckpoint()
-      PqStatics(big, cents,
-        Similarity.pqCodebooksFromSample(big, m = 4, every = 200)
-          .localCheckpoint(),
-        Similarity.ivfPqResidualCodebooks(big, cents, m = 4, every = 200)
-          .localCheckpoint(),
-        Similarity.knnGraph(big, degree = 8, bits = 8).localCheckpoint())
-    })
-  private[graft] def warmPqStatics(s: SparkSession, d: String): Unit = {
-    pqStatics(s, d); ()
+  private val pqStatics = Frozen("pq_statics") { (s, d) =>
+    val big = scaledEmbeddings(s, d, copies = 8)
+    val cents = big.filter(col("vec_id") % 125 === 0)
+      .select(col("vec_id").as("centroid_id"),
+        col("embedding").as("cvec"))
+      .localCheckpoint()
+    PqStatics(big, cents,
+      Similarity.pqCodebooksFromSample(big, m = 4, every = 200)
+        .localCheckpoint(),
+      Similarity.ivfPqResidualCodebooks(big, cents, m = 4, every = 200)
+        .localCheckpoint(),
+      Similarity.knnGraph(big, degree = 8, bits = 8).localCheckpoint())
   }
 
   /** Frozen warm BM25 index over the full sf documents corpus for
-    * x78i — the [[pqStatics]] discipline on lexical retrieval: built
-    * ONCE untimed (Bench warm-up; lazily on first use in dev-filtered
-    * runs) and probed per pass, so x78i times pure retrieval while
-    * x78 keeps the build-inclusive one-shot number. */
-  private val bm25StaticMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def bm25Static(s: SparkSession, d: String): DataFrame =
-    bm25StaticMemo.getOrElseUpdate(d,
-      TextOps.bm25Index(T.documents(s, d)).localCheckpoint())
-  private[graft] def warmBm25Static(s: SparkSession, d: String): Unit = {
-    bm25Static(s, d); ()
+    * x78i — the [[pqStatics]] discipline on lexical retrieval, so x78i
+    * times pure retrieval while x78 keeps the build-inclusive one-shot
+    * number. */
+  private val bm25Static = Frozen("bm25_static") { (s, d) =>
+    TextOps.bm25Index(T.documents(s, d)).localCheckpoint()
   }
 
   /** Frozen real-media asset table for x08r/x08z — the [[pqStatics]]
-    * discipline on the codec benches: synthesized ONCE untimed (Bench
-    * warm-up; lazily on first use in dev-filtered runs), so the
-    * entries time the decode-side codec path (header parse / decode +
-    * resize + re-encode), not the synthesis encode. A deployment's
-    * asset table already exists on disk; the synthesis is fixture
-    * manufacture, not measured work. */
-  private val mediaStaticMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def mediaStatic(s: SparkSession, d: String): DataFrame =
-    mediaStaticMemo.getOrElseUpdate(d,
-      Multimodal.asAssetsReal(
-        T.documents(s, d).select(col("doc_id"), col("text")))
-        .localCheckpoint())
-  private[graft] def warmMediaStatic(s: SparkSession, d: String): Unit = {
-    mediaStatic(s, d); ()
+    * discipline on the codec benches, so the entries time the
+    * decode-side codec path (header parse / decode + resize +
+    * re-encode), not the synthesis encode. A deployment's asset table
+    * already exists on disk; the synthesis is fixture manufacture, not
+    * measured work. */
+  private val mediaStatic = Frozen("media_static") { (s, d) =>
+    Multimodal.asAssetsReal(
+      T.documents(s, d).select(col("doc_id"), col("text")))
+      .localCheckpoint()
   }
+
+  /** The frozen statics the scale benches probe, for Bench's untimed
+    * warm-up ([[Frozen.warm]]). */
+  private[graft] val frozenStatics: Seq[Frozen[_]] =
+    Seq(pqStatics, bm25Static, mediaStatic)
 
   /** The part-name corpus replicated `copies`x with distinct ids but
     * UNCHANGED names (block populations multiply — the fixed-vocabulary

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Physical-plan snapshots: `.explain("formatted")` for every
@@ -10,8 +10,9 @@ import java.nio.file.{Files, Paths}
   * filters, exchange count, codegen spans — without running anything;
   * regenerating after a change shows exactly which plans moved.
   *
-  * Usage: `sbt "runMain graft.PlanDump [sfDir] [outDir]"`
-  * (defaults: /root/testdata/sf0.001, plans). Egress-style queries
+  * Usage: `sbt "runMain graft.PlanDump [sfDir] [outDir] [names…]"`
+  * (defaults: the sf0.001 fixture dir, `plans`, every SparkEntry key;
+  * names may also be bench-only x-keys). Egress-style queries
   * (q52-q54, t42…) execute their write as part of building the frame —
   * the dump pays those small sf0.001 writes.
   */
@@ -45,21 +46,12 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "plans"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv("4")
     Files.createDirectories(Paths.get(outDir))
     var failed = 0
     // args(2..): optional name filter (accepts bench-only x-keys too) —
     // the round-16 before/after snapshot path (plans/r16/)
-    val slate: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] =
+    val slate: Seq[(String, (SparkSession, String) => DataFrame)] =
       if (args.length > 2)
         // resolve lazily: an unknown/typo'd name must report a per-name
         // FAIL below, not crash the whole dump with a bare
@@ -67,9 +59,9 @@ object PlanDump {
         args.drop(2).toSeq.map(n => n ->
           SparkEntry.queries.get(n)
             .orElse(DataQueries.benchOnly.get(n))
-            .getOrElse((_: org.apache.spark.sql.SparkSession,
-                _: String) => sys.error(s"unknown key '$n' (not in " +
-              "SparkEntry.queries or DataQueries.benchOnly)")))
+            .getOrElse((_: SparkSession, _: String) =>
+              sys.error(s"unknown key '$n' (not in " +
+                "SparkEntry.queries or DataQueries.benchOnly)")))
       else SparkEntry.queries.toSeq.sortBy(_._1)
     for ((name, build) <- slate) {
       try {

@@ -22,8 +22,15 @@ object Tables {
     * every action still scans parquet; no results or data are held.
     * Keyed by session and dropped whenever a different session shows
     * up, so sequential test suites (each with its own session) never
-    * see a frame bound to a stopped context (the mediaStaticMemo
-    * ADVICE wart, avoided here by construction). */
+    * see a frame bound to a stopped context ([[Frozen]] keys its
+    * statics by SparkContext the same way).
+    *
+    * Static-fixture assumption: the file listing is frozen at first
+    * resolution. A base table rewritten under `dir` within one session
+    * is NOT re-listed — later reads serve the stale listing (or fail on
+    * deleted files). Fixtures and warehouse inputs are never rewritten
+    * in place within a session; a caller that must do so reads through
+    * `spark.read` directly, not `table` (as the egress round trips do). */
   @volatile private var relMemo: (SparkSession,
     java.util.concurrent.ConcurrentHashMap[String, DataFrame]) = null
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -417,22 +417,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("__j"), 4).as("jaccard"))
   }
 
-  /** Per-bit vote vector for a 64-bit SimHash (Charikar '02) over word
-    * unigram features: votes[b] = sum over features of +/-1 by bit b of the
-    * feature hash. Single aggregate pass (see minHashSignature note on why
-    * staging matters). */
-  private def simHashVotes(text: Column): Column = {
-    // word-bigram features: unigrams over a small vocabulary make long
-    // documents' token SETS near-identical and the sketch degenerates
-    val hashes = TextOps.wordShingleHashes(text, 2)
-    val init = transform(sequence(lit(1), lit(64)), _ => lit(0L))
-    val bitMasks = array((0 until 64).map(b => lit(1L << b)): _*)
-    aggregate(hashes, init, (acc, h) =>
-      zip_with(acc, transform(bitMasks, m =>
-          when(h.bitwiseAND(m) =!= 0L, 1L).otherwise(-1L)),
-        (a, v) => a + v))
-  }
-
   /** Fold a 64-slot vote vector (an attribute reference, so the fold stays
     * cheap) into the final 64-bit simhash long. */
   private def votesToHash(votes: Column): Column =
@@ -446,19 +430,6 @@ object Dedup {
                   outCol: String = "simhash"): DataFrame =
     df.withColumn(outCol,
       graft.functions.GraftFunctions.simhash64(col(textCol), 2))
-
-  /** Pure-functions._ variant of [[withSimHash]] (two staged projections so
-    * the vote aggregate runs once though the fold references it 64x). */
-  def withSimHashHof(df: DataFrame, textCol: String = "text",
-                     outCol: String = "simhash"): DataFrame =
-    df.withColumn("__votes", simHashVotes(col(textCol)))
-      .withColumn(outCol, votesToHash(col("__votes")))
-      .drop("__votes")
-
-  /** 64-bit SimHash as a single Column (convenience for small inputs; at
-    * scale prefer [[withSimHash]] whose staged projection guarantees the
-    * vote pass runs once). */
-  def simHash64(text: Column): Column = votesToHash(simHashVotes(text))
 
   /** md5-derived 64-bit SimHash votes — cross-engine recomputable (the
     * DuckDB oracle rebuilds the identical sketch): per-shingle hash = two

@@ -15,28 +15,17 @@ import org.apache.spark.sql.expressions.Window
   */
 object Similarity {
 
-  /** Double-precision dot product of two float-array columns; sequential
-    * fold => deterministic, identical across partitionings. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
+  /** Double-precision L2 norm of a float-array column; sequential fold
+    * => deterministic, identical across partitionings. */
   def l2Norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
       lit(0.0), (acc, v) => acc + v))
 
-  /** Native codegen'd kernel (graft.functions.CosineSimExpr) — same
-    * sequential double accumulation as [[cosineHof]], one loop, no
-    * intermediate arrays. */
+  /** Native codegen'd kernel (graft.functions.CosineSimExpr): one
+    * sequential double accumulation of dot and norms, one loop, no
+    * intermediate arrays; 0 when either norm is 0. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine_sim(a, b)
-
-  /** Pure-functions._ reference formulation. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = l2Norm(a) * l2Norm(b)
-    when(n === 0, 0.0).otherwise(d / n)
-  }
 
   /** Exact brute-force cosine top-k: for each query row, the k nearest
     * corpus rows (excluding itself when `selfJoin`, the shared-id-space
@@ -1446,9 +1435,13 @@ object Similarity {
     // the old row_number window ranked __cos desc NULLS LAST (a null
     // never made the beam), but the ascending (negCos, nid) struct sort
     // puts nulls FIRST — without this filter a null vector would
-    // silently enter every beam (round-16 ADVICE). Fixture vectors are
-    // non-null, so plans gain one codegen Filter and results are
-    // byte-identical (t69 oracle unchanged).
+    // silently enter every beam (round-16 ADVICE). Not exactly the
+    // window form on one edge: a query group with fewer than `beam`
+    // non-null cosines used to fill its trailing slots with null-cosine
+    // neighbors and now keeps only the non-null ones (a shorter beam).
+    // Fixture vectors are non-null, so that edge is unreachable there:
+    // plans gain one codegen Filter and results are byte-identical (t69
+    // oracle unchanged).
     def topBeam(scored: DataFrame): DataFrame =
       scored.filter(col("__cos").isNotNull).groupBy(col("query_id"))
         .agg(slice(sort_array(collect_set(struct(

@@ -98,7 +98,10 @@ object Stats {
     * the KMV sketch (and any replaying oracle: DuckDB's
     * `('0x'||substr(md5(v),1,15))::bigint` is identical) — the
     * [[graft.functions.BloomBits]] discipline: sketch build and oracle
-    * replay provably hash the same way. */
+    * replay provably hash the same way. `c` must be a STRING column:
+    * the native kernel (`Md5PrefixExpr`) accepts StringType only and
+    * fails analysis on anything else, BinaryType included (Spark's own
+    * md5 takes binary) — cast other types to string first. */
   def hash60(c: Column): Column =
     // native kernel; value-identical to
     // conv(substring(md5(c), 1, 15), 16, 10).cast("long") — the hex

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, document fingerprinting.
@@ -39,15 +40,6 @@ object TextOps {
       alphaRatio * 0.5 + lengthOk * 0.3 +
         (lit(1.0) - least(lit(1.0), punctRatio * 10)) * 0.1 +
         when(meanWordLen.between(2, 12), 0.1).otherwise(0.0))), 4)
-  }
-
-  /** Character n-gram shingles of the lowercased, whitespace-collapsed text. */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = lower(regexp_replace(trim(text), "\\s+", " "))
-    filter(
-      transform(sequence(lit(1), greatest(length(norm) - (n - 1), lit(1))),
-        i => norm.substr(i, lit(n))),
-      s => length(s) === n)
   }
 
   /** Word n-gram shingles, in position order. Built with the same
@@ -136,14 +128,12 @@ object TextOps {
   def docFingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
 
-  /** 64-bit rolling-style fingerprint as a long (xxhash64 of normalized
-    * text) — cheaper join key than the hex digest at 100 TB. */
-  def docFingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
-
   /** First 32 bits of md5(s) as an unsigned long in [0, 2^32) — the
     * deterministic, cross-engine-recomputable uniform hash used for
-    * sampling decisions (DuckDB: ('0x'||substr(md5(s),1,8))::bigint). */
+    * sampling decisions (DuckDB: ('0x'||substr(md5(s),1,8))::bigint).
+    * `s` must be a STRING column — the [[graft.ops.Stats.hash60]]
+    * contract: the native kernel rejects every other type, binary
+    * included. */
   def md5U32(s: Column): Column =
     // native kernel; value-identical to the conv/substring/md5 chain
     // (see Stats.hash60)
@@ -1369,7 +1359,8 @@ object TextOps {
                               sourceCol: String = "source"): DataFrame = {
     val out = mixFrame(docs, capPerSource, rate, salt, capacity, buckets,
       idCol, textCol, sourceCol)
-    hashShard(out, shards, idCol, salt = salt + ":shuffle")
+    val sharded = hashShard(out, shards, idCol, salt = salt + ":shuffle")
+    sharded
       .repartition(shards, col("shard"))
       // shard leads the sort so the partitioned writer's required
       // ordering (partition columns first) is already satisfied —
@@ -1379,7 +1370,16 @@ object TextOps {
       .write.mode("overwrite").partitionBy("shard").parquet(path)
     mixManifest(out).coalesce(1)
       .write.mode("overwrite").parquet(path + "_manifest")
-    docs.sparkSession.read.parquet(path)
+    // read back with the known schema, not by inference: an empty mix
+    // (every document died upstream) lands no payload file, and schema
+    // inference over an empty layout fails. The columns are the ones
+    // inference yields on a non-empty layout: the payload as written
+    // (parquet reads back nullable), then the shard=N directory value,
+    // which partition inference types as int.
+    docs.sparkSession.read
+      .schema(StructType(sharded.schema.filter(_.name != "shard")
+        .map(_.copy(nullable = true)) :+ StructField("shard", IntegerType)))
+      .parquet(path)
   }
 
   /** The deterministic mix frame (doc_id, bucket, bin, n_tokens,
@@ -1443,8 +1443,13 @@ object TextOps {
     * bin), never the text payload. */
   def auditTrainingMix(spark: org.apache.spark.sql.SparkSession,
                        path: String): DataFrame = {
-    val actual = mixManifest(spark.read.parquet(path)
-        .select(col("doc_id"), col("n_tokens"), col("bucket"), col("bin")))
+    // the payload's metadata columns by known schema, not inference: an
+    // empty mix (every document died upstream) lands no payload file
+    // under its partition directories, and its audit is empty, not an
+    // inference failure (the unpartitioned manifest always lands a file)
+    val actual = mixManifest(spark.read
+        .schema("doc_id long, n_tokens long, bucket long, bin long")
+        .parquet(path))
       .select(col("bucket"), col("bin"), col("n_docs").as("a_docs"),
         col("n_tokens").as("a_tokens"), col("content_hash").as("a_hash"))
     val expected = spark.read.parquet(path + "_manifest")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface — net-new relative to the reference (a
@@ -10,6 +11,11 @@ import org.apache.spark.sql.types._
   *
   * The same transform functions run in batch mode (DataQueries.t10 is the
   * batch twin of [[hourlyRollup]]) — write once, run either way.
+  *
+  * Every foreachBatch gate (`run*GateOnce`, `runIngestScreenOnce`,
+  * `runAsofEnrichOnce`, `runRangeJoinOnce`) and monitor (`start*`)
+  * returns its started StreamingQuery: `.awaitTermination()` runs it
+  * one-shot, and the bench bounds the wait with its in-stream cap.
   */
 object Streams {
 
@@ -20,6 +26,19 @@ object Streams {
     * written as the escape — a raw NUL byte in source makes git treat
     * the file as binary and hides its diffs (round-10 advice). */
   val NullKeySentinel: String = "\u0000null"
+
+  /** The one foreachBatch starter every gate and monitor below runs
+    * through: `stream` drains one-shot (Trigger.AvailableNow) and `each`
+    * receives every microbatch. Returns the started query — the caller
+    * owns termination (`awaitTermination()` for a one-shot run, a capped
+    * wait in the bench). */
+  private def startEachBatch(stream: DataFrame, outputMode: String = "append")
+                            (each: DataFrame => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, _: Long) => each(batch) }
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -159,7 +178,7 @@ object Streams {
     * discovered on Tuesday queries Monday's state), and grids persisted
     * per window merge by summing cells. Complete mode; estimates are a
     * downstream batch step on the aggregate-sized grid (streaming
-    * forbids the probe's second aggregate) — [[runFrequencyMonitorOnce]]
+    * forbids the probe's second aggregate) — [[startFrequencyMonitor]]
     * wires it per trigger. Null items fold to one sentinel identity
     * (the s13 rule: a null-spewing producer is exactly the storm shape
     * this exists to flag). Write-once: same function on a batch frame
@@ -176,36 +195,20 @@ object Streams {
     * (event_type, probe, est_count, alarm) rows, alarm =
     * est_count > maxCount — the replay-storm / bot-flood per-item gate.
     * The estimate NEVER undercounts (CMS guarantee), so an alarm can
-    * only be early, never missed, at any width. */
-  def runFrequencyMonitorOnce(spark: SparkSession, dir: String,
-                              watch: DataFrame, maxCount: Long,
-                              sink: DataFrame => Unit,
-                              filesPerTrigger: Int = 1,
-                              depth: Int = 4, width: Int = 1024): Unit =
-    startFrequencyMonitor(spark, dir, watch, maxCount, sink,
-      filesPerTrigger, depth, width).awaitTermination()
-
-  /** [[runFrequencyMonitorOnce]] without the await — returns the started
-    * query so a caller (the bench's capped runner) can own termination.
-    * ONE wiring of the grid + probe + alarm, however it is driven. */
+    * only be early, never missed, at any width. Returns the started
+    * query; the caller owns termination. */
   def startFrequencyMonitor(spark: SparkSession, dir: String,
                             watch: DataFrame, maxCount: Long,
                             sink: DataFrame => Unit,
                             filesPerTrigger: Int = 1,
                             depth: Int = 4, width: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    frequencyGrid(eventsStreamPaced(spark, dir, filesPerTrigger),
-        depth, width)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (grid: DataFrame, _: Long) =>
-        sink(graft.ops.Stats.cmsEstimate(grid, watch, Seq("event_type"),
-            depth, width)
-          .withColumn("alarm", col("est_count") > maxCount))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    startEachBatch(frequencyGrid(eventsStreamPaced(spark, dir,
+        filesPerTrigger), depth, width), "complete") { grid =>
+      sink(graft.ops.Stats.cmsEstimate(grid, watch, Seq("event_type"),
+          depth, width)
+        .withColumn("alarm", col("est_count") > maxCount))
+    }
 
   /** [[frequencyGrid]] with exponential decay
     * ([[graft.ops.Stats.cmsDecayedSketchBy]]): the long-running form of
@@ -235,20 +238,15 @@ object Streams {
                                    sink: DataFrame => Unit,
                                    filesPerTrigger: Int = 1,
                                    depth: Int = 4, width: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    decayedFrequencyGrid(eventsStreamPaced(spark, dir, filesPerTrigger),
-        t0Micros, halfLifeSeconds, depth, width)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (grid: DataFrame, _: Long) =>
-        sink(graft.ops.Stats.cmsDecayedEstimate(grid, watch,
-            Seq("event_type"), asOfMicros, t0Micros, halfLifeSeconds,
-            depth, width)
-          .withColumn("alarm", col("est_decayed") > maxDecayed))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    startEachBatch(decayedFrequencyGrid(eventsStreamPaced(spark, dir,
+        filesPerTrigger), t0Micros, halfLifeSeconds, depth, width),
+        "complete") { grid =>
+      sink(graft.ops.Stats.cmsDecayedEstimate(grid, watch,
+          Seq("event_type"), asOfMicros, t0Micros, halfLifeSeconds,
+          depth, width)
+        .withColumn("alarm", col("est_decayed") > maxDecayed))
+    }
 
   /** [[cardinalityMonitor]]'s sketch under epoch slicing
     * ([[graft.ops.Stats.hllEpochSketchBy]]) — the long-running form of
@@ -295,33 +293,28 @@ object Streams {
                                      asOfMicros: Option[Long],
                                      sink: DataFrame => Unit,
                                      filesPerTrigger: Int = 1, p: Int = 9)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    epochCardinalityGrid(eventsStreamPaced(spark, dir, filesPerTrigger),
-        t0Micros, halfLifeSeconds, p)
-      .writeStream
-      .outputMode("complete")
-      .foreachBatch { (grid: DataFrame, _: Long) =>
-        val asOf = asOfMicros.getOrElse {
-          // aggregate-sized grid; an all-null max (no data yet) reads
-          // as-of t0 — the estimate frame is empty then anyway
-          val maxEpoch = grid.agg(max(col("epoch"))).first()
-          t0Micros + (if (maxEpoch.isNullAt(0)) 0L
-                      else maxEpoch.getLong(0)) *
-            halfLifeSeconds * 1000000L
-        }
-        sink(graft.ops.Stats.hllDecayedDistinct(grid, Seq("event_type"),
-            asOf, t0Micros, halfLifeSeconds, p)
-          // double /0 is Infinity (not an error even under ANSI), and
-          // Infinity > maxRepeatFactor — a zero-distinct active type
-          // alarms through either arm, as it should
-          .withColumn("alarm", col("rows_decayed") >= activityFloor &&
-            (col("est_decayed") < minDistinct ||
-              col("rows_decayed") / col("est_decayed") >
-                maxRepeatFactor)))
-        ()
+      : StreamingQuery =
+    startEachBatch(epochCardinalityGrid(eventsStreamPaced(spark, dir,
+        filesPerTrigger), t0Micros, halfLifeSeconds, p),
+        "complete") { grid =>
+      val asOf = asOfMicros.getOrElse {
+        // aggregate-sized grid; an all-null max (no data yet) reads
+        // as-of t0 — the estimate frame is empty then anyway
+        val maxEpoch = grid.agg(max(col("epoch"))).first()
+        t0Micros + (if (maxEpoch.isNullAt(0)) 0L
+                    else maxEpoch.getLong(0)) *
+          halfLifeSeconds * 1000000L
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      sink(graft.ops.Stats.hllDecayedDistinct(grid, Seq("event_type"),
+          asOf, t0Micros, halfLifeSeconds, p)
+        // double /0 is Infinity (not an error even under ANSI), and
+        // Infinity > maxRepeatFactor — a zero-distinct active type
+        // alarms through either arm, as it should
+        .withColumn("alarm", col("rows_decayed") >= activityFloor &&
+          (col("est_decayed") < minDistinct ||
+            col("rows_decayed") / col("est_decayed") >
+              maxRepeatFactor)))
+    }
 
   /** Streaming length-drift gate — sampled token-count quantiles per
     * source at ingest: a [[graft.functions.KMinPairs]] bottom-k-by-hash
@@ -766,36 +759,22 @@ object Streams {
                                   sink: DataFrame => Unit,
                                   filesPerTrigger: Int = 1,
                                   watermark: String = "60 days")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     var grid: Option[DataFrame] = None
-    transitionsWithState(
-        eventsStreamPaced(spark, dir, filesPerTrigger), watermark).toDF()
-      .writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val delta = b.groupBy(col("prev_type"), col("next_type"))
-          .agg(count(lit(1)).as("n_transitions"))
-        val next = grid.fold(delta)(g =>
-          g.unionByName(delta)
-            .groupBy(col("prev_type"), col("next_type"))
-            .agg(sum(col("n_transitions")).as("n_transitions")))
-          .localCheckpoint()
-        grid = Some(next)
-        sink(transitionDrift(transitionGridProbs(next), baseline, tol))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val pairs = transitionsWithState(
+      eventsStreamPaced(spark, dir, filesPerTrigger), watermark).toDF()
+    startEachBatch(pairs) { b =>
+      val delta = b.groupBy(col("prev_type"), col("next_type"))
+        .agg(count(lit(1)).as("n_transitions"))
+      val next = grid.fold(delta)(g =>
+        g.unionByName(delta)
+          .groupBy(col("prev_type"), col("next_type"))
+          .agg(sum(col("n_transitions")).as("n_transitions")))
+        .localCheckpoint()
+      grid = Some(next)
+      sink(transitionDrift(transitionGridProbs(next), baseline, tol))
+    }
   }
-
-  /** [[startTransitionDriftMonitor]] with the await — the one-shot
-    * runner. */
-  def runTransitionDriftOnce(spark: SparkSession, dir: String,
-                             baseline: DataFrame, tol: Double = 0.1,
-                             sink: DataFrame => Unit,
-                             filesPerTrigger: Int = 1,
-                             watermark: String = "60 days"): Unit =
-    startTransitionDriftMonitor(spark, dir, baseline, tol, sink,
-      filesPerTrigger, watermark).awaitTermination()
 
   /** Stream-stream interval join: purchases attributed to the clicks of
     * the same user within the preceding `horizon`. Both sides carry a
@@ -869,17 +848,11 @@ object Streams {
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    val q = eventsStream(spark, dir, glob, nanosTs)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = upsertUserTotals(readTarget(), batch)
-        graft.etl.Publish
-          .publishAll(targetRoot, Map("user_totals" -> merged)).get
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    startEachBatch(eventsStream(spark, dir, glob, nanosTs)) { batch =>
+      val merged = upsertUserTotals(readTarget(), batch)
+      graft.etl.Publish
+        .publishAll(targetRoot, Map("user_totals" -> merged)).get
+    }.awaitTermination()
     readTarget()
   }
 
@@ -911,44 +884,38 @@ object Streams {
       if (exists) spark.read.parquet(tablePath)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val q = eventsStream(spark, dir, glob, nanosTs)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch
-          .withColumn("month",
-            (expr("year(ts)") * 100 + expr("month(ts)")).cast("int"))
-          .groupBy(col("user_id").as("__uid"), col("month").as("__m"))
-          .agg(count(lit(1)).as("__n"),
-            sum(col("value").cast("decimal(18,4)")).as("__sum"))
-        // touched months: bounded by the batch's event-time span (a
-        // handful), so the driver-side list is a scalar lookup, not data
-        val months = delta.select(col("__m")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (months.nonEmpty) {
-          val current = readAll().filter(col("month").isin(months: _*))
-          val merged = current
-            .join(delta, col("user_id") === col("__uid") &&
-              col("month") === col("__m"), "full_outer")
-            .select(
-              coalesce(col("user_id"), col("__uid")).as("user_id"),
-              (coalesce(col("n_events"), lit(0L)) +
-                coalesce(col("__n"), lit(0L))).as("n_events"),
-              (coalesce(col("sum_value"),
-                  lit(java.math.BigDecimal.ZERO).cast("decimal(18,4)")) +
-                coalesce(col("__sum"),
-                  lit(java.math.BigDecimal.ZERO).cast("decimal(18,4)")))
-                .cast("decimal(18,4)").as("sum_value"),
-              coalesce(col("month"), col("__m")).as("month"))
-            .localCheckpoint()
-          merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("month").parquet(tablePath)
-        }
-        ()
+    startEachBatch(eventsStream(spark, dir, glob, nanosTs)) { batch =>
+      val delta = batch
+        .withColumn("month",
+          (expr("year(ts)") * 100 + expr("month(ts)")).cast("int"))
+        .groupBy(col("user_id").as("__uid"), col("month").as("__m"))
+        .agg(count(lit(1)).as("__n"),
+          sum(col("value").cast("decimal(18,4)")).as("__sum"))
+      // touched months: bounded by the batch's event-time span (a
+      // handful), so the collected list is a scalar lookup, not data
+      val months = delta.select(col("__m")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      if (months.nonEmpty) {
+        val current = readAll().filter(col("month").isin(months: _*))
+        val merged = current
+          .join(delta, col("user_id") === col("__uid") &&
+            col("month") === col("__m"), "full_outer")
+          .select(
+            coalesce(col("user_id"), col("__uid")).as("user_id"),
+            (coalesce(col("n_events"), lit(0L)) +
+              coalesce(col("__n"), lit(0L))).as("n_events"),
+            (coalesce(col("sum_value"),
+                lit(java.math.BigDecimal.ZERO).cast("decimal(18,4)")) +
+              coalesce(col("__sum"),
+                lit(java.math.BigDecimal.ZERO).cast("decimal(18,4)")))
+              .cast("decimal(18,4)").as("sum_value"),
+            coalesce(col("month"), col("__m")).as("month"))
+          .localCheckpoint()
+        merged.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("month").parquet(tablePath)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }.awaitTermination()
     readAll()
   }
 
@@ -964,7 +931,7 @@ object Streams {
       .format("memory")
       .queryName(sinkName)
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     spark.table(sinkName)
@@ -989,19 +956,12 @@ object Streams {
                          sink: DataFrame => Unit,
                          filesPerTrigger: Int = 1,
                          bands: Int = 8, rowsPerBand: Int = 4,
-                         shingleSize: Int = 3): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Dedup.nearDupFlag(batch, index,
-          bands = bands, rowsPerBand = rowsPerBand,
-          shingleSize = shingleSize))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         shingleSize: Int = 3): StreamingQuery =
+    startEachBatch(docsStreamPaced(spark, dir, filesPerTrigger)) { batch =>
+      sink(graft.ops.Dedup.nearDupFlag(batch, index,
+        bands = bands, rowsPerBand = rowsPerBand,
+        shingleSize = shingleSize))
+    }
 
   /** Streaming semantic ingest gate — the s05 discipline applied to the
     * embedding modality: incoming vectors are screened per microbatch
@@ -1027,22 +987,15 @@ object Streams {
                           sink: DataFrame => Unit,
                           tau: Double = 0.99,
                           filesPerTrigger: Int = 1,
-                          nprobe: Int = 1): Unit = {
-    val q = embsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(
-          if (nprobe > 1)
-            graft.ops.Dedup.semanticDupFlagProbed(batch, index, centroids,
-              tau, nprobe)
-          else
-            graft.ops.Dedup.semanticDupFlag(batch, index, centroids, tau))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                          nprobe: Int = 1): StreamingQuery =
+    startEachBatch(embsStreamPaced(spark, dir, filesPerTrigger)) { batch =>
+      sink(
+        if (nprobe > 1)
+          graft.ops.Dedup.semanticDupFlagProbed(batch, index, centroids,
+            tau, nprobe)
+        else
+          graft.ops.Dedup.semanticDupFlag(batch, index, centroids, tau))
+    }
 
   /** Streaming lexical-decontamination gate — the s05/s07
     * build-once/probe-forever discipline applied to BM25 retrieval:
@@ -1063,35 +1016,16 @@ object Streams {
                       index: DataFrame, sink: DataFrame => Unit,
                       tau: Double, filesPerTrigger: Int = 1,
                       minLen: Int = 3,
-                      exactSums: Boolean = true): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // pinWidth=false: the postings width pin would pay its
-        // exchanges EVERY trigger on a ~75 KB microbatch probe whose
-        // fan-out never needs the width (the round-14 s12 floor
-        // lesson); the batch keys (t78/t79/t84) keep the pin
-        sink(graft.ops.TextOps.bm25ScreenFlag(batch, index, tau,
-          minLen = minLen, exactSums = exactSums, pinWidth = false))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      exactSums: Boolean = true): StreamingQuery =
+    startEachBatch(docsStreamPaced(spark, dir, filesPerTrigger)) { batch =>
+      // pinWidth=false: the postings width pin would pay its
+      // exchanges EVERY trigger on a ~75 KB microbatch probe whose
+      // fan-out never needs the width (the round-14 s12 floor
+      // lesson); the batch keys (t78/t79/t84) keep the pin
+      sink(graft.ops.TextOps.bm25ScreenFlag(batch, index, tau,
+        minLen = minLen, exactSums = exactSums, pinWidth = false))
+    }
 
-  /** Streaming DSIR ingest gate — the s05/s07 build-once/probe-forever
-    * discipline applied to the data-selection model: incoming documents
-    * are scored per microbatch against a FROZEN
-    * [[graft.ops.TextOps.dsirProfile]] (built once from the raw/target
-    * model corpora and materialized), each row emerging with its
-    * (n_grams, log_weight) — a deployment thresholds on log_weight to
-    * keep target-like documents at ingest. Per batch: one broadcast
-    * profile join + one doc-keyed aggregate ([[graft.ops.TextOps
-    * .dsirScore]]), stateless across batches, so the paced stream's
-    * union equals the batch scorer over the same files
-    * (StreamingSpec-pinned; benched as s09). (n, buckets, salt) MUST
-    * match the profile build or the buckets silently disagree. */
   /** Composed per-document ingest screen — every doc-modality gate in
     * ONE pass over an incoming frame: per document its quality score
     * and PII count (pure projections), its near-dup flag against the
@@ -1141,21 +1075,14 @@ object Streams {
                         payload: Seq[String], tie: String,
                         sink: DataFrame => Unit,
                         tolerance: Option[String] = None,
-                        filesPerTrigger: Int = 1): Unit = {
-    val q = eventsStreamPaced(spark, dir, filesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Temporal.asofJoin(batch, right, Seq("user_id"),
-          "ts", rightTs, payload, tie, tolerance))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                        filesPerTrigger: Int = 1): StreamingQuery =
+    startEachBatch(eventsStreamPaced(spark, dir, filesPerTrigger)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"),
+          col("ts"))) { batch =>
+      sink(graft.ops.Temporal.asofJoin(batch, right, Seq("user_id"),
+        "ts", rightTs, payload, tie, tolerance))
+    }
 
   /** Stream-static RANGE-JOIN enrichment — the s11 as-of discipline on
     * the many-match contract: each paced purchase microbatch joins
@@ -1169,20 +1096,13 @@ object Streams {
                        intervals: DataFrame, startTs: String,
                        endTs: String, bucketSeconds: Long,
                        sink: DataFrame => Unit,
-                       filesPerTrigger: Int = 1): Unit = {
-    val q = eventsStreamPaced(spark, dir, filesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("ts"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Temporal.rangeJoinBucketed(batch, intervals,
-          "ts", startTs, endTs, bucketSeconds))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                       filesPerTrigger: Int = 1): StreamingQuery =
+    startEachBatch(eventsStreamPaced(spark, dir, filesPerTrigger)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("ts"))) { batch =>
+      sink(graft.ops.Temporal.rangeJoinBucketed(batch, intervals,
+        "ts", startTs, endTs, bucketSeconds))
+    }
 
   /** Streaming form of [[ingestScreen]] — the s10 bench shape: paced
     * documents screened per microbatch against BOTH frozen statics via
@@ -1191,32 +1111,29 @@ object Streams {
   def runIngestScreenOnce(spark: SparkSession, dir: String,
                           bandIndex: DataFrame, dsirProfile: DataFrame,
                           sink: DataFrame => Unit,
-                          filesPerTrigger: Int = 1): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(ingestScreen(batch, bandIndex, dsirProfile))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                          filesPerTrigger: Int = 1): StreamingQuery =
+    startEachBatch(docsStreamPaced(spark, dir, filesPerTrigger)) { batch =>
+      sink(ingestScreen(batch, bandIndex, dsirProfile))
+    }
 
+  /** Streaming DSIR ingest gate — the s05/s07 build-once/probe-forever
+    * discipline applied to the data-selection model: incoming documents
+    * are scored per microbatch against a FROZEN
+    * [[graft.ops.TextOps.dsirProfile]] (built once from the raw/target
+    * model corpora and materialized), each row emerging with its
+    * (n_grams, log_weight) — a deployment thresholds on log_weight to
+    * keep target-like documents at ingest. Per batch: one broadcast
+    * profile join + one doc-keyed aggregate ([[graft.ops.TextOps
+    * .dsirScore]]), stateless across batches, so the paced stream's
+    * union equals the batch scorer over the same files
+    * (StreamingSpec-pinned; benched as s09). (n, buckets, salt) MUST
+    * match the profile build or the buckets silently disagree. */
   def runDsirGateOnce(spark: SparkSession, dir: String,
                       profile: DataFrame, sink: DataFrame => Unit,
                       filesPerTrigger: Int = 1, n: Int = 2,
                       buckets: Int = 4096,
-                      salt: String = "dsir"): Unit = {
-    val q = docsStreamPaced(spark, dir, filesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.TextOps.dsirScore(batch, profile, n, buckets,
-          salt))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      salt: String = "dsir"): StreamingQuery =
+    startEachBatch(docsStreamPaced(spark, dir, filesPerTrigger)) { batch =>
+      sink(graft.ops.TextOps.dsirScore(batch, profile, n, buckets, salt))
+    }
 }

@@ -137,6 +137,25 @@ class CurationSpec extends SparkSpec {
     assert(!r.report.collect().map(_.getString(1)).contains("dsir_select"))
   }
 
+  test("an all-killed corpus ends with egress 0 and an empty audit") {
+    // single-line documents C4 drops (no terminal punctuation; under
+    // minWords): every document dies at c4_clean, so the sharded mix
+    // lands no payload file at all
+    val dead = Seq(
+      (1L, "this line has no terminal punctuation at all", "web"),
+      (2L, "Too short.", "books")).toDF("doc_id", "text", "source")
+    val out = java.nio.file.Files.createTempDirectory("curate_dead").toString
+    val r = Curation.run(dead, evalSet, out, capacity = 64, buckets = 4,
+      shards = 4)
+    val byStage = r.report.collect()
+      .map(row => row.getString(1) -> row.getLong(2)).toMap
+    assert(byStage("input") === 2L)
+    assert(byStage("c4_clean") === 0L)
+    assert(byStage("egress") === 0L)
+    assert(r.mix.count() === 0L)
+    assert(r.audit.count() === 0L)
+  }
+
   test("optional DSIR selection stage: off-distribution docs die at " +
       "dsir_select, the stage sits between prune and allocate") {
     // two fully-gibberish docs — every line passes the C4 rules, all

@@ -3,8 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Structural lints that pin two round-15/16 audit results so they
-  * cannot regress silently:
+/** Structural lints that pin audit results and documented contracts
+  * so they cannot regress silently:
   *
   *  1. exactSums invariant (round-15 sweep, round-15 verdict item 2):
   *     no corpus-scaled non-oracle path pays fractional-decimal
@@ -26,6 +26,13 @@ import scala.jdk.CollectionConverters._
   *     NEW round-robin site fails here and must either go through
   *     `graft.ops.Par.fanOutReady` or be added with an A/B
   *     measurement note at the call site.
+  *
+  *  3. ENGINE.md's entry points exist: every backticked `Object.member`
+  *     in an "Entry point" column names a definition under src/main.
+  *
+  *  4. one session factory: `SparkSession.builder` appears in exactly
+  *     one file under src/main/scala (graft.Session), so every main
+  *     runs on the same session recipe.
   */
 class LintSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
@@ -79,7 +86,6 @@ class LintSpec extends SparkSpec {
     //   Tables: fixture-export sharding (paced-stream part files)
     //   DataQueries: bench-twin scan spreading (defaultParallelism,
     //     measured flat-to-better on the salted corpora)
-    //   FanoutXp: the dev A/B experiment main itself
     //   Par: the guarded implementation (the one sanctioned door)
     val audited = Map(
       "ops/TextOps.scala" -> 1,
@@ -88,7 +94,6 @@ class LintSpec extends SparkSpec {
       // 8-branch union width and every consumer's cosine kernel ran
       // 8-wide (A/B note at the call site)
       "DataQueries.scala" -> 5,
-      "FanoutXp.scala" -> 1,
       "ops/Par.scala" -> 1,
       // round-16 A/B (OPTIMIZATION_r16.md): the per-row codec kernel
       // ran serial behind a one-task corpus scan; the 40 KB id frame
@@ -131,5 +136,56 @@ class LintSpec extends SparkSpec {
         s"$audited — route new spreading through " +
         "graft.ops.Par.fanOutReady (stats-floor guarded) or A/B it " +
         "and pin the new count here with a call-site note")
+  }
+
+  private def mainSources: Seq[(java.nio.file.Path, String)] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toList
+    finally walk.close()
+  }
+
+  test("ENGINE.md entry points resolve: every backticked Object.member " +
+      "in an Entry point column names a definition under src/main") {
+    val srcs = mainSources.map(_._2)
+    // `[pkg.]Object.member[/member…]`, argument text `(...)` stripped
+    val objMember = """(?:[a-z]\w*\.)*([A-Z]\w*)\.([a-z][\w/…]*)""".r
+    val tokens = Files.readAllLines(Paths.get("ENGINE.md")).asScala
+      .foldLeft((Option.empty[Int], Vector.empty[String])) {
+        case ((col, acc), line) if !line.startsWith("|") => (None, acc)
+        case ((col, acc), line) =>
+          val cells = line.trim.stripPrefix("|").stripSuffix("|")
+            .split("\\|").map(_.trim).toSeq
+          col match {
+            case None => (Some(cells.indexOf("Entry point")), acc)
+            case Some(c) if c < 0 || line.startsWith("|---") => (col, acc)
+            case Some(c) => (col, acc ++ "`([^`]*)`".r
+              .findAllMatchIn(cells.lift(c).getOrElse("")).map(_.group(1)))
+          }
+      }._2
+    val unresolved = tokens.flatMap { tok =>
+      tok.replaceAll("\\([^)]*\\)", "") match {
+        case objMember(obj, members) =>
+          members.split("/").filter(_ != "…").filterNot { m =>
+            srcs.exists(src =>
+              s"\\bobject\\s+$obj\\b".r.findFirstIn(src).isDefined &&
+                s"\\b(def|val|var|class|object)\\s+$m\\b".r
+                  .findFirstIn(src).isDefined)
+          }.map(m => s"$obj.$m")
+        case _ => Nil
+      }
+    }
+    assert(tokens.size > 200, s"parsed only ${tokens.size} entry points")
+    assert(unresolved.isEmpty, s"ENGINE.md cites entry points with no " +
+      s"definition under src/main: ${unresolved.mkString(", ")}")
+  }
+
+  test("one session factory: SparkSession.builder appears in exactly " +
+      "one file under src/main/scala") {
+    val builders = mainSources.collect {
+      case (p, src) if src.contains("SparkSession.builder") => p.toString
+    }
+    assert(builders.size == 1, s"SparkSession.builder in " +
+      s"${builders.mkString(", ")} — build sessions through graft.Session")
   }
 }

@@ -200,7 +200,7 @@ class StreamingSpec extends SparkSpec {
         .collect().toSeq.map(r => (r.getLong(0),
           Option(r.getAs[java.lang.Double](1)).map(_.toDouble),
           r.getLong(2))),
-      tau = 9.0)
+      tau = 9.0).awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.flatten.sortBy(_._1)
     val batch = TextOps
@@ -245,6 +245,7 @@ class StreamingSpec extends SparkSpec {
     Streams.runNearDupGateOnce(spark, parts, idx,
       b => got += b.select(col("doc_id"), col("is_near_dup"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.flatten.sortBy(_._1)
     val batch = Dedup
@@ -296,6 +297,7 @@ class StreamingSpec extends SparkSpec {
     Streams.runSemanticGateOnce(spark, parts, idx, cents,
       b => got += b.select(col("vec_id"), col("is_semantic_dup"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.flatten.sortBy(_._1)
     val batch = Dedup
@@ -330,7 +332,7 @@ class StreamingSpec extends SparkSpec {
     Streams.runSemanticGateOnce(spark, parts, idx, cents,
       b => got2 += b.select(col("vec_id"), col("is_semantic_dup"))
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))),
-      nprobe = 2)
+      nprobe = 2).awaitTermination()
     val paced2 = got2.flatten.sortBy(_._1)
     val batch2 = Dedup
       .semanticDupFlagProbed(graft.etl.Tables.embeddings(spark, d), idx,
@@ -621,9 +623,9 @@ class StreamingSpec extends SparkSpec {
     val baseline = Seq(("A", "B", 1.0))
       .toDF("prev_type", "next_type", "prob")
     @volatile var last: Array[org.apache.spark.sql.Row] = Array.empty
-    Streams.runTransitionDriftOnce(spark, s"$dir/ev", baseline,
+    Streams.startTransitionDriftMonitor(spark, s"$dir/ev", baseline,
       tol = 0.1, sink = f => { last = f.collect() },
-      filesPerTrigger = 1, watermark = "2 days")
+      filesPerTrigger = 1, watermark = "2 days").awaitTermination()
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getLong(5)))).toMap
@@ -862,7 +864,7 @@ class StreamingSpec extends SparkSpec {
           if (r.isNullAt(2)) None else Some(r.getDouble(2))))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Scored]]
     Streams.runDsirGateOnce(spark, parts, prof,
-      b => got += rows(b), buckets = 512)
+      b => got += rows(b), buckets = 512).awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sortBy(_._1)
     val batch = rows(TextOps.dsirScore(docs, prof, buckets = 512))
@@ -904,7 +906,7 @@ class StreamingSpec extends SparkSpec {
           r.getDouble(4), r.getLong(5)))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Screened]]
     Streams.runIngestScreenOnce(spark, parts, idx, prof,
-      b => got += rows(b))
+      b => got += rows(b)).awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sortBy(_._1)
     val batch = rows(Streams.ingestScreen(docs, idx, prof)).sortBy(_._1)
@@ -943,6 +945,7 @@ class StreamingSpec extends SparkSpec {
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Enriched]]
     Streams.runAsofEnrichOnce(spark, parts, views, "view_ts",
       Seq("view_id", "view_value"), "view_id", b => got += rows(b))
+      .awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sortBy(_._1)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -959,7 +962,7 @@ class StreamingSpec extends SparkSpec {
     val gotT = scala.collection.mutable.ArrayBuffer.empty[Seq[Enriched]]
     Streams.runAsofEnrichOnce(spark, parts, views, "view_ts",
       Seq("view_id", "view_value"), "view_id", b => gotT += rows(b),
-      tolerance = Some("1 second"))
+      tolerance = Some("1 second")).awaitTermination()
     val pacedT = gotT.toSeq.flatten.sortBy(_._1)
     val batchT = rows(Temporal.asofJoin(purchases, views, Seq("user_id"),
       "ts", "view_ts", Seq("view_id", "view_value"), tie = "view_id",
@@ -986,7 +989,7 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1)))
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long)]]
     Streams.runRangeJoinOnce(spark, parts, incidents, "inc_start",
-      "inc_end", bucketSeconds = 7200L, b => got += pairs(b))
+      "inc_end", bucketSeconds = 7200L, b => got += pairs(b)).awaitTermination()
     assert(got.size >= 4, s"expected >=4 paced microbatches, saw ${got.size}")
     val paced = got.toSeq.flatten.sorted
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -1040,12 +1043,12 @@ class StreamingSpec extends SparkSpec {
     val watch = Seq(("click", "77777"), ("click", "1")).toDF(
       "event_type", "probe")
     var last: Map[(String, String), (Long, Boolean)] = Map.empty
-    Streams.runFrequencyMonitorOnce(spark, stormDir, watch,
+    Streams.startFrequencyMonitor(spark, stormDir, watch,
       maxCount = 300L,
       sink = est => last = est.collect().map(r =>
         (r.getString(0), r.getString(1)) ->
           (r.getLong(2), r.getBoolean(3))).toMap,
-      filesPerTrigger = 2)
+      filesPerTrigger = 2).awaitTermination()
     val trueCounts = spark.read.parquet(stormDir)
       .filter(col("event_type") === "click" &&
         col("user_id").isin(77777L, 1L))
